@@ -11,7 +11,8 @@ of standard output. ``--trace 0`` reports the end-to-end metrics;
 into each engine layer (see ``spans.py``), plus the tracing overhead.
 
 Everything the run writes lives under ``.bench_work/`` in the checkout
-and is removed at exit.
+and is removed at exit, except the spans of a traced run, kept in
+``.bench_work/spans/<workload>-<seed>.jsonl``.
 """
 
 from __future__ import annotations
@@ -277,8 +278,10 @@ def main(argv=None) -> int:
         vals["session.start_s"] = session_s
         vals["session.peak_rss_mb"] = peak
         vals["trace.job_p50_s"] = statistics.median(times)
-        if os.environ.get("PERFBENCH_SPANS"):
-            tracer.dump(os.environ["PERFBENCH_SPANS"])
+        spans_path = os.path.join(ROOT, ".bench_work", "spans", f"{w.name}-{args.seed}.jsonl")
+        os.makedirs(os.path.dirname(spans_path), exist_ok=True)
+        tracer.dump(spans_path)
+        info["spans"] = os.path.relpath(spans_path, ROOT)
         metrics = {k: {"value": v, "unit": unit_of(k)} for k, v in sorted(vals.items())}
     else:
         items = sum(n for _, n, _ in jobs)
