@@ -59,23 +59,22 @@ class SstGrid:
         return self.temp.shape[1] * self.temp.shape[2]
 
 
-def sst_grid(
-    seed: int,
-    ny: int = 16,
-    nx: int = 16,
-    *,
-    phi: float = 0.9,
-    anom_sd: float = 0.7,
-    heatwaves_per_cell: int = 6,
-) -> SstGrid:
+#: AR(1) anomalies: lag-1 autocorrelation and stationary standard
+#: deviation (C). Red noise is the usual null model for SST anomalies;
+#: with these values exceedances of the 90th percentile cluster into
+#: multi-day runs, about 2 events per cell-year as on observed OISST
+PHI = 0.9
+ANOM_SD = 0.7
+#: planted warm bumps per cell, 10-40 days and +2.5..4 C each
+HEATWAVES_PER_CELL = 6
+
+
+def sst_grid(seed: int, ny: int, nx: int) -> SstGrid:
     """Daily SST 1982-01-01..2014-12-31 on an ``ny`` x ``nx`` grid.
 
-    Anomalies are AR(1) with lag-1 autocorrelation ``phi`` and
-    stationary standard deviation ``anom_sd`` (red noise, the usual
-    null model for SST anomalies), so exceedances of the 90th
-    percentile cluster into multi-day runs as in real data. Each cell
-    also gets ``heatwaves_per_cell`` planted warm bumps of 10-40 days
-    and +2.5..4 C, non-overlapping and spread over the whole record.
+    Anomalies are AR(1) (:data:`PHI`, :data:`ANOM_SD`). Each cell also
+    gets :data:`HEATWAVES_PER_CELL` planted warm bumps, non-overlapping
+    and spread over the whole record.
     """
     rng = np.random.default_rng(seed)
     n_days = (LAST_DAY - DAY0).days + 1
@@ -86,18 +85,18 @@ def sst_grid(
     # warmer toward the equator, small zonal tilt
     base = 17.0 + 0.8 * (lat[:, None] + 40.0) + 0.1 * (lon[None, :] - 154.0)
 
-    innov = rng.standard_normal((n_days, ny * nx)) * anom_sd * np.sqrt(
-        1.0 - phi * phi
+    innov = rng.standard_normal((n_days, ny * nx)) * ANOM_SD * np.sqrt(
+        1.0 - PHI * PHI
     )
     anom = np.empty_like(innov)
-    anom[0] = rng.standard_normal(ny * nx) * anom_sd
+    anom[0] = rng.standard_normal(ny * nx) * ANOM_SD
     for t in range(1, n_days):
-        anom[t] = phi * anom[t - 1] + innov[t]
+        anom[t] = PHI * anom[t - 1] + innov[t]
 
     planted = []
-    span = n_days // heatwaves_per_cell
+    span = n_days // HEATWAVES_PER_CELL
     for cell in range(ny * nx):
-        for k in range(heatwaves_per_cell):
+        for k in range(HEATWAVES_PER_CELL):
             dur = int(rng.integers(10, 41))
             start = k * span + int(rng.integers(0, span - dur))
             amp = rng.uniform(2.5, 4.0)
@@ -227,46 +226,49 @@ def _vocabulary(rng: np.random.Generator, size: int) -> list[str]:
     return words
 
 
-def corpus(
-    seed: int,
-    n_docs: int = 20_000,
-    *,
-    vocab_size: int = 5_000,
-    zipf_s: float = 1.0,
-    zipf_q: float = 2.7,
-    n_sources: int = 20,
-    dup_frac: float = 0.15,
-    edit_frac: float = 0.03,
-) -> Corpus:
-    """``n_docs`` documents of 60-240 tokens over ``vocab_size``
-    synthetic words drawn from a Zipf-Mandelbrot law,
-    p(rank r) ~ 1 / (r + ``zipf_q``) ** ``zipf_s`` (the usual fit to
-    English word counts), attributed to ``n_sources`` sources. A
-    ``dup_frac`` share of the documents are near-duplicates: each is a
-    copy of an original (seed) document with ``edit_frac`` of its tokens
-    substituted, deleted or inserted, and sometimes from another source
-    (cross-source duplication)."""
+#: synthetic words; large enough that random documents share almost
+#: no 3-shingles (unlike a 40-word test vocabulary)
+VOCAB_SIZE = 5_000
+#: Zipf-Mandelbrot word law p(rank r) ~ 1 / (r + ZIPF_Q) ** ZIPF_S,
+#: the usual fit to English word counts
+ZIPF_S = 1.0
+ZIPF_Q = 2.7
+N_SOURCES = 20
+#: share of documents that are planted near-duplicates, and the share
+#: of a duplicate's tokens edited away from its seed document
+DUP_FRAC = 0.15
+EDIT_FRAC = 0.03
+
+
+def corpus(seed: int, n_docs: int) -> Corpus:
+    """``n_docs`` documents of 60-240 tokens over :data:`VOCAB_SIZE`
+    synthetic words drawn from the Zipf-Mandelbrot law, attributed to
+    :data:`N_SOURCES` sources. A :data:`DUP_FRAC` share of the
+    documents are near-duplicates: each is a copy of an original (seed)
+    document with :data:`EDIT_FRAC` of its tokens substituted, deleted
+    or inserted, and sometimes from another source (cross-source
+    duplication)."""
     rng = np.random.default_rng(seed)
-    words = _vocabulary(rng, vocab_size)
-    p = 1.0 / (np.arange(1, vocab_size + 1) + zipf_q) ** zipf_s
+    words = _vocabulary(rng, VOCAB_SIZE)
+    p = 1.0 / (np.arange(1, VOCAB_SIZE + 1) + ZIPF_Q) ** ZIPF_S
     p /= p.sum()
     cdf = np.cumsum(p)
 
     def draw(n: int) -> list[int]:
         return np.searchsorted(cdf, rng.random(n), side="right").clip(
-            0, vocab_size - 1).tolist()
+            0, VOCAB_SIZE - 1).tolist()
 
-    n_dups = int(n_docs * dup_frac)
+    n_dups = int(n_docs * DUP_FRAC)
     n_orig = n_docs - n_dups
     toks: list[list[int]] = [draw(int(rng.integers(60, 241))) for _ in range(n_orig)]
-    sources = [int(rng.integers(n_sources)) for _ in range(n_orig)]
+    sources = [int(rng.integers(N_SOURCES)) for _ in range(n_orig)]
     # clusters of 1-4 copies around randomly chosen seeds
     planted = []
     while len(planted) < n_dups:
         seed_doc = int(rng.integers(n_orig))
         for _ in range(min(int(rng.integers(1, 5)), n_dups - len(planted))):
             t = list(toks[seed_doc])
-            for _ in range(max(1, int(len(t) * edit_frac))):
+            for _ in range(max(1, int(len(t) * EDIT_FRAC))):
                 i = int(rng.integers(len(t)))
                 op = int(rng.integers(3))
                 if op == 0:
@@ -278,7 +280,7 @@ def corpus(
             planted.append((len(toks), seed_doc))
             toks.append(t)
             same = rng.random() < 0.7
-            sources.append(sources[seed_doc] if same else int(rng.integers(n_sources)))
+            sources.append(sources[seed_doc] if same else int(rng.integers(N_SOURCES)))
     # shuffle doc ids so duplicates are not contiguous with their seeds
     perm = rng.permutation(n_docs)
     doc_id = perm.astype(np.int64)

@@ -2,7 +2,7 @@
 end-to-end metric with its unit, the per-layer metrics, and the tracing
 overhead (traced minus untraced ``job_p50_s``).
 
-    python3 perfbench/report.py --seed 1 --seconds 10 [--workloads mhw_batch,...]
+    python3 perfbench/report.py --seed 1 --seconds 10
 
 Each run is a separate ``run.py`` process, started with the same
 arguments as a single benchmark run.
@@ -33,16 +33,15 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--workloads", default=",".join(ALL))
     args = ap.parse_args()
-    for w in args.workloads.split(","):
+    for w in ALL:
         info, res = run(w, args.seed, args.seconds, 0)
         tinfo, tres = run(w, args.seed, args.seconds, 1)
         print(f"== {w}  correct={res['correct']} jobs={res['attempted']} "
               f"failed={res['failed']} item={info['item']}")
         for k, m in res["metrics"].items():
             print(f"  {k:<34} {m['value']:>14.6g} {m['unit']}")
-        extra = {k: v for k, v in info.items() if k.startswith(("events", "job_p", "candidate"))}
+        extra = {k: v for k, v in info.items() if k.startswith(("events", "job_p", "candidate", "finish"))}
         if extra:
             print(f"  {extra}")
         print(f"  -- traced run: correct={tres['correct']}")

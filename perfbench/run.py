@@ -3,10 +3,11 @@
     python3 perfbench/run.py --workload mhw_batch --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. Generates the workload's inputs from
-``--seed``, sets up, runs one warm-up job, then runs jobs in a closed
-loop for ``--seconds`` (at least one), checks every job's output
-outside the timed window, and prints one JSON object as the last line
-of standard output. ``--trace 0`` reports the end-to-end metrics;
+``--seed``, sets up, runs the workload's warm-up jobs
+(``Workload.warmup_jobs``), then runs jobs in a closed loop for
+``--seconds`` (at least one), checks every job's output and then the
+whole run's outside the timed window, and prints one JSON object as the
+last line of standard output. ``--trace 0`` reports the end-to-end metrics;
 ``--trace 1`` reports the per-layer metrics from spans around the calls
 into each engine layer (see ``spans.py``), plus the tracing overhead.
 
@@ -252,7 +253,10 @@ def main(argv=None) -> int:
             warm_ok = w.check(-1 - k) and warm_ok
         setup_s = session_s + statistics.median(prep) + warm_s
         jobs = run_jobs(w, ctx, args.seconds, traced=bool(args.trace))
+        tracer.start_trace("finish")
+        t = time.perf_counter()
         final_ok = w.finish()
+        finish_s = time.perf_counter() - t
         if args.trace:
             tracer.collect_counters()
         peak = jvm_peak_rss_mb(spark)
@@ -271,6 +275,7 @@ def main(argv=None) -> int:
     times = [dt for dt, _, _ in jobs]
     info = dict(w.info, workload=w.name, jobs=attempted, job_times_s=[round(x, 3) for x in times],
                 setup_reps_s=[round(x, 3) for x in prep], warmup_s=round(warm_s, 3),
+                finish_s=round(finish_s, 3),
                 session_s=round(session_s, 3), item=w.item, recall=w.recall,
                 peak_rss_mb=round(peak, 1))
     if args.trace:

@@ -43,6 +43,9 @@ class Span:
     call_s: float = 0.0
     exec_s: float = 0.0
     counters: dict = field(default_factory=dict)
+    #: job groups Spark set itself on work the span started: a
+    #: streaming query runs its micro-batches under its ``runId``
+    extra_groups: list = field(default_factory=list)
 
     @property
     def group(self) -> str:
@@ -104,7 +107,10 @@ class Tracer:
         counters = read_group_counters(self.spark)
         empty = {k: 0.0 for k in (*STAGE_COUNTERS, "jobs")}
         for s in self.spans:
-            s.counters = counters.get(s.group, dict(empty))
+            s.counters = dict(empty)
+            for g in (s.group, *s.extra_groups):
+                for k, v in counters.get(g, empty).items():
+                    s.counters[k] += v
 
     def nesting_ok(self) -> bool:
         """Every child span lies inside its parent, in the same job."""
@@ -135,6 +141,11 @@ class _SpanCtx:
         """End of the Python call; what follows is forcing its output."""
         if self.span is not None:
             self.span.call_s = time.perf_counter() - self.span.start
+
+    def add_group(self, group: str) -> None:
+        """Count the jobs of ``group`` too (see ``Span.extra_groups``)."""
+        if self.span is not None:
+            self.span.extra_groups.append(group)
 
     def __exit__(self, *exc) -> None:
         if self.span is not None:

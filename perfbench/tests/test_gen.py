@@ -43,7 +43,7 @@ def test_grid_shape_and_planted_heatwaves(grid):
     assert grid.temp.shape == (12053, 2, 3)
     assert grid.temp.dtype == np.float32
     pl = grid.planted
-    assert len(pl) == 6 * grid.n_cells
+    assert len(pl) == gen.HEATWAVES_PER_CELL * grid.n_cells
     assert pl[:, 0].min() == 0 and pl[:, 0].max() == grid.n_cells - 1
     assert (pl[:, 2] - pl[:, 1] + 1 >= 10).all() and (pl[:, 2] < grid.n_days).all()
     flat = grid.temp.reshape(grid.n_days, -1).astype(np.float64)
@@ -102,8 +102,8 @@ def test_corpus_is_byte_identical_and_planted_duplicates_are_near(tmp_path):
     }
     assert gen.corpus(4, 600).text != c1.text
     assert sorted(c1.doc_id.tolist()) == list(range(600))
-    assert len(set(c1.source)) == 20
-    assert len(c1.planted) == 90
+    assert len(set(c1.source)) == gen.N_SOURCES
+    assert len(c1.planted) == int(600 * gen.DUP_FRAC)
     text = dict(zip(c1.doc_id.tolist(), c1.text))
     seeds = set(c1.planted[:, 1].tolist())
     assert not seeds & set(c1.planted[:, 0].tolist())

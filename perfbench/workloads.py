@@ -3,7 +3,9 @@ against a local Spark session.
 
 - ``mhw_batch``: yearly netCDF files -> parquet store (set-up), then
   each job reads the store, runs ``plans.detect_mhw`` and writes the
-  event table to a sink.
+  event table to a sink. After the timed loop the events are rebuilt
+  on the incremental path (``streaming_detect_partials`` drains the
+  2012-2014 tail) and must equal the jobs'.
 - ``mhw_append``: the 1982-2011 climatology and history partials are
   stored in set-up; each job drops one time slice into a directory that
   ``streaming.streaming_detect_partials`` watches, drains it with an
@@ -13,8 +15,9 @@ against a local Spark session.
   near-duplicate corpus and writes the report to a sink.
 
 Each workload's set-up is ``prepare`` (generate + ingest, repeated and
-timed) followed by one warm-up job; ``job`` is the timed body and
-``check`` the output check, run outside the timed window.
+timed) followed by ``warmup_jobs`` untimed jobs; ``job`` is the timed
+body, ``check`` the output check after each job and ``finish`` the
+check after the last one, both outside the timed window.
 """
 
 from __future__ import annotations
@@ -35,6 +38,8 @@ RECALL_FLOOR = 0.85
 #: agreement ``detect_partials`` documents for merged vs whole-series
 #: detection (moment sums are re-associated, ~1e-12 relative)
 EVENT_TOL = 1e-9
+#: the append slices' schema, as ``gen.SLICE_SCHEMA`` writes them
+SLICE_SCHEMA = "cell_id long, time timestamp, temp double"
 
 
 def events_match(a: pd.DataFrame, b: pd.DataFrame) -> bool:
@@ -114,8 +119,76 @@ class Workload:
         raise NotImplementedError
 
     def finish(self) -> bool:
-        """Checks that need the whole run; False fails every job."""
+        """Checks that need the whole run, after the timed loop; False
+        fails every job."""
         return True
+
+
+# -------------------------------------------------------- incremental path
+def history_partials(w: Workload, hist, out: str):
+    """Store the climatology of ``hist`` (the 1982-2011 baseline) and
+    write the run partials of ``hist`` scored against it to
+    ``out/batch=-1``. Returns the stored climatology."""
+    from mhw3d_detection_spark.operators.climatology import pooled_climatology
+    from mhw3d_detection_spark.operators.detection import detect_partials
+    from mhw3d_detection_spark.operators.severity import calculate_severity
+
+    with w.span("pooled_climatology", "climatology") as s:
+        clim = pooled_climatology(
+            hist, baseline=gen.BASELINE, pool_mode="grid", output="arrays")
+        s.mark_called()
+        clim.write.mode("overwrite").parquet(w.path("clim"))
+    clim = w.spark.read.parquet(w.path("clim"))
+    with w.span("calculate_severity", "severity"):
+        sev = calculate_severity(hist, clim)
+    with w.span("detect_partials", "detection") as s:
+        parts = detect_partials(sev)
+        s.mark_called()
+        parts.write.parquet(os.path.join(out, "batch=-1"))
+    return clim
+
+
+def drain(w: Workload, watch: str, clim, partials: str) -> int:
+    """Score the slice files new in ``watch`` against ``clim`` and
+    compress them into ``partials`` through
+    ``streaming_detect_partials``, one micro-batch per file, with
+    ``trigger(availableNow=True)`` on the persistent checkpoint
+    ``w.path("ckpt")``. Returns the number of micro-batches."""
+    from mhw3d_detection_spark.operators.severity import calculate_severity
+    from mhw3d_detection_spark.streaming import streaming_detect_partials
+
+    stream = (
+        w.spark.readStream.schema(SLICE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(watch)
+    )
+    with w.span("calculate_severity", "severity"):
+        sev = calculate_severity(stream, clim)
+    with w.span("streaming_detect_partials", "streaming") as s:
+        q = (
+            streaming_detect_partials(sev, partials)
+            .option("checkpointLocation", w.path("ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        s.mark_called()
+        q.awaitTermination()
+        s.add_group(str(q.runId))
+    if q.exception() is not None:
+        raise RuntimeError(str(q.exception()))
+    return len(q.recentProgress)
+
+
+def merge_to_sink(w: Workload, partials: str, sink: str, materialize_runs: bool = True) -> None:
+    """Write ``merge_detect_partials`` over the store ``partials`` to
+    ``sink``."""
+    from mhw3d_detection_spark.operators.detection import merge_detect_partials
+
+    with w.span("merge_detect_partials", "detection") as s:
+        events = merge_detect_partials(
+            w.spark.read.parquet(partials), materialize_runs=materialize_runs)
+        s.mark_called()
+        events.write.mode("overwrite").parquet(sink)
 
 
 # ---------------------------------------------------------------- mhw_batch
@@ -129,6 +202,9 @@ class MhwBatch(Workload):
     #: each job is the first detect_mhw of a fresh session: a warm-up
     #: job would double the run time (README.md)
     warmup_jobs = 0
+    #: the 2012-2014 tail is streamed in this many slices by
+    #: :meth:`finish`, one micro-batch each
+    tail_slices = 3
 
     def prepare(self) -> None:
         from mhw3d_detection_spark.sources.netcdf import read_netcdf_long
@@ -176,6 +252,33 @@ class MhwBatch(Workload):
             same = events_match(ev, self.ref)
         return sane and same and self.recall >= RECALL_FLOOR
 
+    def finish(self) -> bool:
+        """The jobs' events, rebuilt on the incremental path: partials
+        of the 1982-2011 history in batch, the 2012-2014 tail drained
+        through ``streaming_detect_partials`` in :attr:`tail_slices`
+        micro-batches, and ``merge_detect_partials`` over both must
+        equal the last job's events."""
+        from pyspark.sql import functions as F
+
+        for d in ("tail", "watch", "partials", "ckpt"):
+            shutil.rmtree(self.path(d), ignore_errors=True)
+        lo = gen.year_bounds(gen.BASELINE[1] + 1)[0]
+        hist = self.spark.read.parquet(self.path("store")).where(
+            F.col("time") < F.lit(f"{gen.BASELINE[1] + 1}-01-01").cast("timestamp"))
+        clim = history_partials(self, hist, self.path("partials"))
+        days = -(-(self.grid.n_days - lo) // self.tail_slices)
+        slices = gen.write_append_slices(self.grid, self.path("tail"), gen.BASELINE[1] + 1, days)
+        os.makedirs(self.path("watch"))
+        for p, _, _ in slices:
+            os.rename(p, self.path("watch", os.path.basename(p)))
+        batches = drain(self, self.path("watch"), clim, self.path("partials"))
+        self.ctx.count("streaming.batches", batches)
+        # unpersisted runs: the persisted ones keep 1 024 partitions
+        # (README.md) and would make this check cost as much as a job
+        merge_to_sink(self, self.path("partials"), self.path("merged"), materialize_runs=False)
+        return batches == len(slices) and events_match(
+            read_sink(self.path("merged")), read_sink(self.path("sink")))
+
 
 # --------------------------------------------------------------- mhw_append
 class MhwAppend(Workload):
@@ -183,12 +286,8 @@ class MhwAppend(Workload):
     item = "sst_sample"
     ny = nx = 4
     slice_days = 30
-    schema = "cell_id long, time timestamp, temp double"
 
     def prepare(self) -> None:
-        from mhw3d_detection_spark.operators.climatology import pooled_climatology
-        from mhw3d_detection_spark.operators.detection import detect_partials
-        from mhw3d_detection_spark.operators.severity import calculate_severity
         from mhw3d_detection_spark.sources.netcdf import read_netcdf_long
 
         for d in ("netcdf", "slices", "watch", "partials", "ckpt", "series"):
@@ -206,49 +305,18 @@ class MhwAppend(Workload):
         hist = self.spark.read.parquet(self.path("series"))
         self.horizon = gen.year_bounds(gen.BASELINE[1] + 1)[0]
         self.ctx.count("sources.rows", self.horizon * self.grid.n_cells)
-        with self.span("pooled_climatology", "climatology") as s:
-            clim = pooled_climatology(
-                hist, baseline=gen.BASELINE, pool_mode="grid", output="arrays")
-            s.mark_called()
-            clim.write.mode("overwrite").parquet(self.path("clim"))
-        self.clim = self.spark.read.parquet(self.path("clim"))
-        with self.span("calculate_severity", "severity"):
-            sev = calculate_severity(hist, self.clim)
-        with self.span("detect_partials", "detection") as s:
-            parts = detect_partials(sev)
-            s.mark_called()
-            parts.write.parquet(self.path("partials", "batch=-1"))
+        self.clim = history_partials(self, hist, self.path("partials"))
         self.next_slice = 0
 
     def job(self, i: int) -> int:
-        from mhw3d_detection_spark.operators.detection import merge_detect_partials
-        from mhw3d_detection_spark.operators.severity import calculate_severity
-        from mhw3d_detection_spark.streaming import streaming_detect_partials
-
         if self.next_slice >= len(self.slices):
             raise RuntimeError("append slices exhausted; shorten the run")
         path, lo, hi = self.slices[self.next_slice]
         self.next_slice += 1
         os.rename(path, self.path("watch", os.path.basename(path)))
-        stream = self.spark.readStream.schema(self.schema).parquet(self.path("watch"))
-        with self.span("calculate_severity", "severity"):
-            sev = calculate_severity(stream, self.clim)
-        with self.span("streaming_detect_partials", "streaming") as s:
-            q = (
-                streaming_detect_partials(sev, self.path("partials"))
-                .option("checkpointLocation", self.path("ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            s.mark_called()
-            q.awaitTermination()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        self.ctx.count("streaming.batches", len(q.recentProgress))
-        with self.span("merge_detect_partials", "detection") as s:
-            events = merge_detect_partials(self.spark.read.parquet(self.path("partials")))
-            s.mark_called()
-            events.write.mode("overwrite").parquet(self.path("sink"))
+        self.ctx.count("streaming.batches",
+                       drain(self, self.path("watch"), self.clim, self.path("partials")))
+        merge_to_sink(self, self.path("partials"), self.path("sink"))
         self.horizon = hi
         return (hi - lo) * self.grid.n_cells
 
@@ -269,7 +337,7 @@ class MhwAppend(Workload):
             self.path("watch", os.path.basename(p)) for p, _, _ in self.slices[: self.next_slice]
         ]
         series = self.spark.read.parquet(self.path("series")).unionByName(
-            self.spark.read.schema(self.schema).parquet(*appended))
+            self.spark.read.schema(SLICE_SCHEMA).parquet(*appended))
         whole = detect_mhw(series, baseline=gen.BASELINE, pool_mode="grid")
         whole.write.mode("overwrite").parquet(self.path("whole"))
         ref = read_sink(self.path("whole"))
@@ -282,8 +350,10 @@ class CorpusDedup(Workload):
     name = "corpus_dedup"
     item = "doc"
     n_docs = 5_000
-    #: the JIT is still compiling through the second job
-    warmup_jobs = 2
+    #: the first job of a session takes 15-18 s against ~7 s for the
+    #: next ones (code generation, Python workers, JIT); a second
+    #: warm-up job would lower the median by ~0.5 s for ~7 s a run
+    warmup_jobs = 1
 
     def prepare(self) -> None:
         self.corpus = gen.corpus(self.seed, self.n_docs)
