@@ -369,6 +369,14 @@ def fused_detect_metrics(
     (window over runs, broadcast range join, final merge) operates on
     it alone. Replaces: a full-series persist + a second series pass +
     the event-days explode-join.
+
+    ``materialize_runs`` persists the runs table, which event assembly
+    and the metric merge both read: at scale it keeps the enrich window
+    and the partial aggregate from running twice. With
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` (set
+    by :data:`~mhw3d_detection_spark.session.RUNTIME_CONFS`) AQE
+    coalesces the cached shuffle like any other, so the persisted path
+    is also the fast one; ``False`` only skips the cache.
     """
     p = _run_partials(
         enriched,
@@ -680,6 +688,9 @@ def merge_detect_partials(
     3. Renumber runs (alternating flags -> consecutive ids) and run the
        standard event assembly + metric merge
        (:func:`_metrics_from_partials`).
+
+    ``materialize_runs`` persists the coalesced runs table, read twice
+    by step 3 — see :func:`fused_detect_metrics`.
     """
     w = Window.partitionBy("cell_id").orderBy("run_start")
     wall = Window.partitionBy("cell_id")

@@ -60,6 +60,11 @@ def detect_mhw(
     clim_ts, if given, supplies an *alternate* series to build the
     climatology from (marineHeatWaves.py:107-113) — free in relational
     form: clim built from table B, joined to table A.
+    materialize_series persists the detection tail's runs table
+    (``materialize_runs`` of
+    :func:`~mhw3d_detection_spark.operators.detection.fused_detect_metrics`);
+    with the session's runtime confs it is the faster setting, not a
+    trade of speed for memory.
     """
     sign = -1.0 if cold_spells else 1.0
 

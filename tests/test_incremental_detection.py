@@ -10,6 +10,7 @@ import datetime as dt
 import math
 import random
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -30,6 +31,11 @@ temp_strategy = st.one_of(
 )
 
 
+# True is the production default (both paths persist their runs
+# table); False plans the same steps without the cache
+@pytest.mark.parametrize(
+    "materialize_runs", [True, False], ids=["persisted", "unpersisted"]
+)
 @settings(max_examples=8, deadline=None)
 @given(
     temps=st.lists(temp_strategy, min_size=8, max_size=60),
@@ -44,6 +50,7 @@ temp_strategy = st.one_of(
 )
 def test_merged_partials_equal_whole_series(
     spark,
+    materialize_runs,
     temps,
     cut_fracs,
     drop_idx,
@@ -74,7 +81,7 @@ def test_merged_partials_equal_whole_series(
         enrich_series(exceedance(df)),
         min_duration=min_duration,
         max_gap=max_gap,
-        materialize_runs=False,
+        materialize_runs=materialize_runs,
     )
 
     cuts = sorted({int(f * len(temps)) for f in cut_fracs})
@@ -99,7 +106,7 @@ def test_merged_partials_equal_whole_series(
         parts,
         min_duration=min_duration,
         max_gap=max_gap,
-        materialize_runs=False,
+        materialize_runs=materialize_runs,
     )
 
     assert set(whole.columns) == set(merged.columns)

@@ -10,10 +10,14 @@ cluster run would reveal it.
 
 import re
 
+import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from mhw3d_detection_spark.operators.climatology import pooled_climatology
 from mhw3d_detection_spark.operators.severity import calculate_severity
+from mhw3d_detection_spark.session import RUNTIME_CONFS, configure
 from mhw3d_detection_spark.sources.tables import load_table
 
 
@@ -153,6 +157,87 @@ def test_fused_detection_tail_single_series_exchange(spark, sf_dir):
     # (cell, __run) aggregate is satisfied by the same clustering — no
     # third exchange anywhere in the plan
     assert _count_exchanges(plan) <= 2, plan
+
+
+@pytest.fixture
+def engine_confs(spark):
+    """The shared session with the engine's runtime confs applied
+    (``initialPartitionNum = 1024`` among them) for one test, restored
+    afterwards; the cache starts and ends empty so no earlier persist
+    of an equal plan is reused."""
+    saved = {k: spark.conf.get(k, None) for k in RUNTIME_CONFS}
+    configure(spark)
+    spark.catalog.clearCache()
+    yield spark
+    spark.catalog.clearCache()
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def _multi_cell_series(spark):
+    # 4 cells x 10 years of flat 15 C + noise, one planted 30-day +4 C
+    # heatwave per cell
+    times = pd.date_range("2000-01-01", "2009-12-31", freq="D")
+    rng = np.random.default_rng(7)
+    frames = []
+    for c in range(4):
+        temp = 15.0 + 0.5 * rng.standard_normal(len(times))
+        start = 400 + 700 * c
+        temp[start : start + 30] += 4.0
+        frames.append(pd.DataFrame({"cell_id": c, "time": times, "temp": temp}))
+    return spark.createDataFrame(pd.concat(frames, ignore_index=True))
+
+
+def _tasks_run(spark, group, action) -> int:
+    """Tasks completed by the jobs ``action`` runs under job group
+    ``group`` (stages a job skipped complete none)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return sum(
+        info.numCompletedTasks
+        for job in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(job).stageIds
+        if (info := st.getStageInfo(sid)) is not None
+    )
+
+
+def test_persisted_detection_tail_coalesces(engine_confs):
+    # Every exchange starts 1024 wide (initialPartitionNum) and AQE
+    # coalesces it — but a PERSISTED plan's final shuffle only with
+    # canChangeCachedPlanOutputPartitioning. Without it the runs table
+    # both detection paths persist keeps 1024 partitions, and so does
+    # every step after it (gap-join window, member join, event
+    # groupBy): ~4 100 tasks on this series, against ~20 coalesced.
+    from mhw3d_detection_spark.operators.detection import (
+        detect_partials,
+        merge_detect_partials,
+    )
+    from mhw3d_detection_spark.plans import detect_mhw
+
+    spark = engine_confs
+    ts = _multi_cell_series(spark)
+    events = detect_mhw(ts)
+    tasks = _tasks_run(spark, "budget-detect-mhw", events.collect)
+    assert 0 < tasks < 200, tasks
+
+    sev = ts.withColumns({"seas": F.lit(15.0), "thresh": F.lit(15.8)})
+    cut = F.col("time") < F.lit("2005-01-01").cast("date")
+    parts = detect_partials(sev.filter(cut)).unionByName(
+        detect_partials(sev.filter(~cut))
+    )
+    merged = merge_detect_partials(parts)  # materialize_runs=True
+    tasks = _tasks_run(spark, "budget-merge-partials", merged.collect)
+    assert 0 < tasks < 200, tasks
 
 
 def test_rank_return_periods_two_phase(spark, sf_dir):
